@@ -222,8 +222,8 @@ HEADLINE = [
 ]
 
 
-# Replay-backed streaming queries memoize their sink per process (the cache
-# key includes the pid — streaming/replay.py:_replay_key), so in a fresh
+# Replay-backed streaming queries memoize their sink per process (under a
+# process-owned directory — streaming/replay.py:_replay_root), so in a fresh
 # bench process run 1 executes the real watermarked drain and run 2 reads
 # the memoized sink. The reported per-query number stays the min (the
 # memoized read, comparable across rounds); the run-1 wall time is reported

@@ -49,6 +49,16 @@ def get_spark(
         # Arrow for the (rare) pandas-UDF paths — the LLM-pipeline operators.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # Compiled whole-stage codegen classes are cached by source text in
+        # a Guava cache that evicts per segment: Spark's default of 100
+        # entries is 4 LRU segments of 25. The nine serving queries generate
+        # 91 distinct classes, a serving pass with its two heavy queries
+        # ~180 and a lake day (ingest, CDC MERGE, compaction) over 160, so a
+        # round-robin loop at 100 evicts each class before its next use and
+        # Janino recompiles it (and the JIT re-warms it) on every request.
+        # 4096 holds those working sets many times over: each class is then
+        # compiled once per session. Static conf: it must be set here.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
@@ -60,12 +70,25 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, milliseconds spent compiling them) by Janino in
+    this JVM so far. Diff two readings to attribute compile cost to the
+    work between them; a cache too small for the working set shows up as
+    compiles on repeated runs of the same query."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return compiles.getCount(), nanos / 1e6
+
+
 def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to an externally provided session.
 
     The driver hands our entry points an already-built session; timezone and
     AQE are runtime-settable, so pin the ones correctness depends on (UTC so
-    unix_timestamp() agrees with DuckDB's epoch()).
+    unix_timestamp() agrees with DuckDB's epoch()). Static conf such as the
+    codegen cache size set in ``get_spark`` cannot be applied here: such a
+    session keeps the builder's value (Spark's default cache is 100).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -23,6 +23,7 @@ written once per sf_dir and reused across runs.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -35,7 +36,20 @@ from ..registry import df_query
 from ..sources.tables import load_tables
 from .cdc import file_replay_source, parse_cdc, windowed_aggregation
 
-_REPLAY_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_cdc_replay")
+_REPLAY_ROOT: str | None = None
+
+
+def _replay_root() -> str:
+    """This process's replay memo: a fresh directory under the temp dir,
+    made on first use and removed when the interpreter exits. Private to
+    the process, so concurrent sessions never race on rmtree-vs-read of a
+    shared directory, and nothing is left behind in the temp dir."""
+    global _REPLAY_ROOT
+    if _REPLAY_ROOT is None:
+        _REPLAY_ROOT = tempfile.mkdtemp(prefix="nyc_taxi_lakehouse_cdc_replay-")
+        atexit.register(shutil.rmtree, _REPLAY_ROOT, ignore_errors=True)
+    return _REPLAY_ROOT
+
 
 # Chunked-delivery opt-in (VERDICT r10 #2): with N > 1, the replay writes
 # its source as N event-time-ordered files and the drain runs ONE FILE PER
@@ -118,10 +132,9 @@ def _replay_key(sf_dir: str) -> str:
 
     Content-addressed: fingerprints the events table's file names, sizes and
     mtimes, so regenerated test data under the same directory name gets a
-    fresh replay instead of stale cached results. The process id is included
-    so two concurrent sessions never race on rmtree-vs-read of a shared
-    directory — memoization is per-process (each driver/pytest session reuses
-    its own replay across repeated runs at the same sf)."""
+    fresh replay instead of stale cached results. Keys live under
+    ``_replay_root()``, so memoization is per-process (each driver/pytest
+    session reuses its own replay across repeated runs at the same sf)."""
     import hashlib
 
     events_path = os.path.join(sf_dir, "events.parquet")
@@ -138,7 +151,7 @@ def _replay_key(sf_dir: str) -> str:
         except OSError:
             h.update(f"{p}:absent".encode())
     base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return f"{base}-{h.hexdigest()[:12]}-pid{os.getpid()}"
+    return f"{base}-{h.hexdigest()[:12]}"
 
 
 def _envelope_frame(events: DataFrame) -> DataFrame:
@@ -223,7 +236,7 @@ def _prepare_envelopes(spark: SparkSession, events: DataFrame, key: str):
     """Shared envelope replay dir honoring the chunked-delivery conf.
     Returns (env_dir, max_files_per_trigger, run-dir suffix)."""
     chunks = _replay_chunks(spark)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes" + _chunk_suffix(chunks))
+    env_dir = os.path.join(_replay_root(), key, "envelopes" + _chunk_suffix(chunks))
     if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
         if chunks > 1:
             write_envelopes_chunked(events, env_dir, chunks)
@@ -261,7 +274,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     suffix = _chunk_suffix(chunks)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes_x2" + suffix)
+    env_dir = os.path.join(_replay_root(), key, "envelopes_x2" + suffix)
     marker = os.path.join(env_dir, "_X2_COMPLETE")
     if not os.path.exists(marker):
         shutil.rmtree(env_dir, ignore_errors=True)
@@ -281,7 +294,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(marker, "w"):
             pass
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "dedup_pipeline" + suffix)
+    run_dir = os.path.join(_replay_root(), key, "dedup_pipeline" + suffix)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     run_marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(run_marker):
@@ -369,7 +382,7 @@ def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "session_pipeline" + suffix)
+    run_dir = os.path.join(_replay_root(), key, "session_pipeline" + suffix)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):
@@ -447,7 +460,7 @@ def q_cdc_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a LAZY parquet read over it. No rows round-trip through the driver
     # (the previous implementation collect()ed the sink so it could delete
     # the temp dir — unbounded driver memory in principle).
-    run_dir = os.path.join(_REPLAY_ROOT, key, "pipeline" + suffix)
+    run_dir = os.path.join(_replay_root(), key, "pipeline" + suffix)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):
@@ -519,7 +532,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "join_pipeline" + suffix)
+    run_dir = os.path.join(_replay_root(), key, "join_pipeline" + suffix)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):
@@ -614,11 +627,11 @@ def q_user_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes")
+    env_dir = os.path.join(_replay_root(), key, "envelopes")
     if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
         write_envelopes(t["events"], env_dir, parallel=_parallel_width(spark))
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "profile_pipeline")
+    run_dir = os.path.join(_replay_root(), key, "profile_pipeline")
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):
@@ -691,7 +704,7 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     run_dir = os.path.join(
-        _REPLAY_ROOT, key, "outer_join_pipeline" + _chunk_suffix(chunks)
+        _replay_root(), key, "outer_join_pipeline" + _chunk_suffix(chunks)
     )
     env_dir = os.path.join(run_dir, "envelopes")
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
@@ -827,7 +840,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "hh_pipeline" + suffix)
+    run_dir = os.path.join(_replay_root(), key, "hh_pipeline" + suffix)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):
@@ -981,7 +994,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     suffix = _chunk_suffix(chunks)
-    src_dir = os.path.join(_REPLAY_ROOT, key, "neardup_src" + suffix)
+    src_dir = os.path.join(_replay_root(), key, "neardup_src" + suffix)
     src_marker = os.path.join(src_dir, "_SRC_COMPLETE")
     docs = t["documents"].selectExpr(
         "doc_id",
@@ -1005,7 +1018,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(src_marker, "w"):
             pass
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "neardup_pipeline" + suffix)
+    run_dir = os.path.join(_replay_root(), key, "neardup_pipeline" + suffix)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     run_marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(run_marker):
@@ -1117,11 +1130,11 @@ JOIN dim d2
 def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes")
+    env_dir = os.path.join(_replay_root(), key, "envelopes")
     if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
         write_envelopes(t["events"], env_dir, parallel=_parallel_width(spark))
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "scd2_enrich_pipeline")
+    run_dir = os.path.join(_replay_root(), key, "scd2_enrich_pipeline")
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):
@@ -1226,11 +1239,11 @@ def run_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes")
+    env_dir = os.path.join(_replay_root(), key, "envelopes")
     if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
         write_envelopes(t["events"], env_dir, parallel=_parallel_width(spark))
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "tws_pipeline")
+    run_dir = os.path.join(_replay_root(), key, "tws_pipeline")
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
     marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
     if not os.path.exists(marker):

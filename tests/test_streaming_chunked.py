@@ -26,8 +26,8 @@ import pytest
 from nyc_taxi_lakehouse_spark.plans.invariance import content_hash
 from nyc_taxi_lakehouse_spark.registry import all_queries
 from nyc_taxi_lakehouse_spark.streaming.replay import (
-    _REPLAY_ROOT,
     REPLAY_CHUNKS_CONF,
+    _replay_root,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -56,13 +56,18 @@ def test_chunked_delivery_matches_single_batch(spark, qname):
 
 
 def test_chunked_mode_actually_chunks(spark):
-    """Non-vacuousness: the parametrized runs above must have built _c4
-    replay artifacts with multiple chunk files — a conf typo that silently
-    fell back to single-file delivery would pass every hash check."""
-    chunk_dirs = glob.glob(os.path.join(_REPLAY_ROOT, "*", "*_c4*"))
+    """Non-vacuousness: a chunked drain must build its replay as multiple
+    chunk files — a conf typo that silently fell back to single-file
+    delivery would pass every hash check above. Builds its own chunked
+    replay, so it holds whether or not the sweep above ran."""
+    spark.conf.set(REPLAY_CHUNKS_CONF, "4")
+    try:
+        assert all_queries()["q_cdc_windowed"].fn(spark, SF).count() > 0
+    finally:
+        spark.conf.set(REPLAY_CHUNKS_CONF, "1")
+    root = _replay_root()
+    chunk_dirs = glob.glob(os.path.join(root, "*", "*_c4*"))
     assert chunk_dirs, "no chunked replay artifacts were created"
-    chunk_files = glob.glob(os.path.join(_REPLAY_ROOT, "*", "*_c4*", "chunk-0003.*"))
-    chunk_files += glob.glob(
-        os.path.join(_REPLAY_ROOT, "*", "*_c4*", "**", "chunk-0003.*")
-    )
+    chunk_files = glob.glob(os.path.join(root, "*", "*_c4*", "chunk-0003.*"))
+    chunk_files += glob.glob(os.path.join(root, "*", "*_c4*", "**", "chunk-0003.*"))
     assert chunk_files, "chunked dirs exist but hold no 4th chunk file"

@@ -4,7 +4,10 @@
 For each named query: runs it once warm (after a throwaway warm-up run),
 captures wall time, the number of Spark jobs/stages it launched, the
 per-stage executor-run-time / shuffle bytes attribution from the UI REST
-API, and writes `.explain("formatted")` to plans/r11/<name>_<tag>.txt.
+API, the generated classes Janino compiled and the milliseconds that took
+(per invocation, warm-ups included: a warm run that still compiles means
+the codegen cache is thrashing), and writes `.explain("formatted")` to
+plans/r11/<name>_<tag>.txt.
 
 Usage:
     python tools/profile_query.py q_dbscan q_hits [--tag before] [--runs 2]
@@ -28,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyc_taxi_lakehouse_spark.plans.ckpt import release_run_checkpoints
 from nyc_taxi_lakehouse_spark.registry import all_queries
-from nyc_taxi_lakehouse_spark.session import get_spark
+from nyc_taxi_lakehouse_spark.session import codegen_stats, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -38,6 +41,11 @@ def _rest(spark, path):
     app_id = spark.sparkContext.applicationId
     with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}") as r:
         return json.load(r)
+
+
+def _since(spark, before):
+    count, ms = codegen_stats(spark)
+    return count - before[0], ms - before[1]
 
 
 def main() -> None:
@@ -61,16 +69,19 @@ def main() -> None:
     for name in args:
         fn = specs[name].fn
         # Warm-up runs (parquet footers, broadcast first-touch).
-        wall = []
+        wall, compiles = [], []
         for _ in range(max(1, runs - 1)):
+            c0 = codegen_stats(spark)
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             df.count()
             wall.append(time.perf_counter() - t0)
+            compiles.append(_since(spark, c0))
             release_run_checkpoints()
         stages_before = {s["stageId"] for s in _rest(spark, "stages")}
         jobs_before = {j["jobId"] for j in _rest(spark, "jobs")}
         spark.sparkContext.setJobDescription(f"profile:{name}")
+        c0 = codegen_stats(spark)
         t0 = time.perf_counter()
         df = fn(spark, SF_DIR)
         if use_noop:
@@ -78,6 +89,7 @@ def main() -> None:
         else:
             df.count()
         wall.append(time.perf_counter() - t0)
+        compiles.append(_since(spark, c0))
         spark.sparkContext.setJobDescription(None)
         # Plan capture from THIS run's frame (pre-release so lineage is live).
         plan_txt = df._jdf.queryExecution().explainString(
@@ -96,6 +108,8 @@ def main() -> None:
             f"# walls={['%.3f' % w for w in wall]} jobs={len(jobs)} stages={len(stages)} "
             f"executorRunTime={tot_run/1e3:.2f}s cpuTime={tot_cpu/1e3:.2f}s "
             f"shuffleWrite={tot_sw/1e6:.1f}MB input={tot_in/1e6:.1f}MB",
+            f"# janino compiles={[n for n, _ in compiles]} "
+            f"compile_ms={['%.0f' % ms for _, ms in compiles]}",
         ]
         for s in stages[:15]:
             lines.append(
